@@ -58,12 +58,12 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import urllib.parse as _uparse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from dataflowex_spark.sources import file_stats
 from dataflowex_spark.sources.commit_backend import get_commit_backend
 
 _SUPPORTED_READER_FEATURES = {
@@ -496,41 +496,6 @@ def _dead_positions(root: str, adds: dict[str, dict]) -> list[tuple]:
     return out
 
 
-_SKIP_OPS = {"=", "<", "<=", ">", ">="}
-
-
-def _stats_allows(add: dict, col_phys: str, op: str, value) -> bool:
-    """Can any row in this file match ``col OP value``? Decided from
-    the add's ``stats`` JSON (numRecords / minValues / maxValues);
-    missing or unparseable stats answer True (keep — skipping may
-    only ever PRUNE provably-dead files, never drop a maybe)."""
-    raw = add.get("stats")
-    if not raw:
-        return True
-    try:
-        st = json.loads(raw) if isinstance(raw, str) else dict(raw)
-    except (TypeError, ValueError):
-        return True
-    lo = (st.get("minValues") or {}).get(col_phys)
-    hi = (st.get("maxValues") or {}).get(col_phys)
-    if lo is None or hi is None:
-        return True
-    try:
-        if op == "=":
-            return lo <= value <= hi
-        if op == "<":
-            return lo < value
-        if op == "<=":
-            return lo <= value
-        if op == ">":
-            return hi > value
-        if op == ">=":
-            return hi >= value
-    except TypeError:
-        return True  # incomparable types: never prune on a guess
-    return True
-
-
 def read_delta(
     spark: SparkSession,
     root: str,
@@ -599,19 +564,21 @@ def read_delta(
             ]
         )
     specs = list(skip_where or [])
-    for col, op, _v in specs:
-        if op not in _SKIP_OPS:
-            raise ValueError(f"skip_where op {op!r} not in {_SKIP_OPS}")
-        if col not in phys_by_logical:
-            raise ValueError(f"skip_where column {col!r} not in schema")
+    file_stats.validate_skip_where(specs, phys_by_logical)
+    stat_cols = {
+        c: (phys_by_logical[c], file_stats.kind_of(schema[c].dataType))
+        for c, _op, _v in specs
+        if c not in part_cols
+    }
+    tz = file_stats.session_tz(spark) if stat_cols else None
     kept: dict[str, dict] = {}
     for path, a in adds.items():
         pv = a.get("partitionValues") or {}
+        st = file_stats.from_delta(a, stat_cols) if stat_cols else None
         ok = True
         for col, op, v in specs:
-            cp = phys_by_logical[col]
             if col in part_cols:
-                raw = pv.get(cp)
+                raw = pv.get(phys_by_logical[col])
                 # partitionValues are canonical STRINGS; pruning is
                 # only sound where string equality implies value
                 # equality — '=' with the literal's canonical form.
@@ -621,7 +588,7 @@ def read_delta(
                     ok = False
                     break
                 continue
-            if not _stats_allows(a, cp, op, v):
+            if not file_stats.may_match(st, col, op, v, tz):
                 ok = False
                 break
         if ok:
@@ -648,7 +615,7 @@ def read_delta(
         )
     if not by_parts:
         out = spark.createDataFrame([], schema)
-        return _apply_skip_filter(out, specs)
+        return file_stats.skip_filter(out, specs)
     dead = _dead_positions(root, adds)
     pieces = []
     for (key, resolved), paths in sorted(
@@ -713,25 +680,7 @@ def read_delta(
         out = out.join(
             F.broadcast(dv_df), ["__fp", "__ri"], "left_anti"
         ).select(*[f.name for f in schema.fields])
-    return _apply_skip_filter(out, specs)
-
-
-def _apply_skip_filter(df: DataFrame, specs: list[tuple]) -> DataFrame:
-    """Apply the skip_where conjunction IN-PLAN — pruning reduces
-    I/O; this keeps semantics exact for files kept on missing
-    stats."""
-    for col, op, v in specs:
-        c = F.col(col)
-        df = df.filter(
-            {
-                "=": c == v,
-                "<": c < v,
-                "<=": c <= v,
-                ">": c > v,
-                ">=": c >= v,
-            }[op]
-        )
-    return df
+    return file_stats.skip_filter(out, specs)
 
 
 # ---------------------------------------------------------------------
@@ -963,14 +912,14 @@ def export_snapshot_to_delta(
         )
     os.makedirs(os.path.join(dest, "data"), exist_ok=True)
     adds = []
-    for e in sorted(m["files"], key=lambda x: x["path"]):
+    for st in sorted(table._stats(m, version), key=lambda r: r.path):
         # name by the MTable file's own basename (unique per write
         # job) so INCREMENTAL publishes can express removes against
         # a stable mapping
-        name = "data/" + os.path.basename(e["path"])
+        name = "data/" + os.path.basename(st.path)
         target = os.path.join(dest, name)
         if not os.path.exists(target):
-            os.link(e["path"], target)
+            os.link(st.path, target)
         adds.append(
             {
                 "add": {
@@ -978,7 +927,9 @@ def export_snapshot_to_delta(
                     "partitionValues": {},
                     "size": os.path.getsize(target),
                     "dataChange": True,
-                    "stats": _mtable_stats_json(e, m["key_col"]),
+                    "stats": file_stats.delta_stats(
+                        st, list(st.bounds), text=file_stats.mtable_text
+                    ),
                 }
             }
         )
@@ -1208,23 +1159,6 @@ def read_delta_changes(
     return df
 
 
-def _mtable_stats_json(entry: dict, key_col: str) -> str:
-    """MTable manifest per-file stats → Delta ``add.stats`` JSON —
-    exported tables get data skipping for free (the key range is
-    always present; declared stats_cols ride along)."""
-    minv = {key_col: entry.get("min_key")}
-    maxv = {key_col: entry.get("max_key")}
-    for c, mm in (entry.get("col_stats") or {}).items():
-        minv[c], maxv[c] = mm[0], mm[1]
-    return json.dumps(
-        {
-            "numRecords": entry.get("rows"),
-            "minValues": minv,
-            "maxValues": maxv,
-        }
-    )
-
-
 def export_delta_increment(
     table, dest: str, version: int | None = None, with_cdc: bool = True
 ) -> int:
@@ -1320,13 +1254,13 @@ def export_delta_increment(
                 }
             }
         )
-    for e in sorted(m_to["files"], key=lambda x: x["path"]):
-        if e["path"] in paths_from:
+    for st in sorted(table._stats(m_to, to_v), key=lambda r: r.path):
+        if st.path in paths_from:
             continue
-        name = "data/" + os.path.basename(e["path"])
+        name = "data/" + os.path.basename(st.path)
         target = os.path.join(dest, name)
         if not os.path.exists(target):
-            os.link(e["path"], target)
+            os.link(st.path, target)
         actions.append(
             {
                 "add": {
@@ -1334,7 +1268,9 @@ def export_delta_increment(
                     "partitionValues": {},
                     "size": os.path.getsize(target),
                     "dataChange": True,
-                    "stats": _mtable_stats_json(e, m_to["key_col"]),
+                    "stats": file_stats.delta_stats(
+                        st, list(st.bounds), text=file_stats.mtable_text
+                    ),
                 }
             }
         )
@@ -1809,8 +1745,8 @@ def _stage_data_files(
     """Write ``df`` as the table's data files (executor-side staging
     job, hive layout under ``partition_by``, atomic renames into
     ``data/``) and return the ``{"add": ...}`` actions with per-file
-    min/max stats aggregated in ONE ``input_file_name``-grouped
-    pass. Shared by :func:`write_delta` and :func:`update_delta`."""
+    min/max stats (:func:`file_stats.collect`). Shared by
+    :func:`write_delta` and :func:`update_delta`."""
     import shutil
     import urllib.parse as _up
     import uuid as _uuid
@@ -1820,47 +1756,12 @@ def _stage_data_files(
     if pcols:
         w = w.partitionBy(*pcols)
     w.parquet(job)
-    from dataflowex_spark.sources.footer_stats import footer_file_stats
-
-    # stats come from the parquet footers the write tasks already
-    # produced (partition columns live in the hive dirs, not the
-    # files, so footers carry exactly the scols); the distributed
-    # re-scan below is only the fallback for stats the footers
-    # cannot reproduce exactly (see footer_stats docstring)
-    stats_rows = footer_file_stats(job, scols, recursive=True)
-    if stats_rows is not None:
-        stats_rows = [{**r, "__path": r["path"]} for r in stats_rows]
-    else:
-        aggs = [F.count(F.lit(1)).alias("__rows")]
-        for c in scols:
-            aggs.append(F.min(c).alias(f"__mn_{c}"))
-            aggs.append(F.max(c).alias(f"__mx_{c}"))
-        stats_rows = [
-            r.asDict()
-            for r in spark.read.parquet(job)
-            .drop(*pcols)  # partition cols re-derive from paths below
-            .groupBy(F.input_file_name().alias("__path"))
-            .agg(*aggs)
-            .collect()
-        ]
-
-    def jsonable(v):
-        import datetime
-
-        if isinstance(v, (datetime.date, datetime.datetime)):
-            return v.isoformat()
-        return v
-
+    # per-file stats from the footers the write tasks produced
+    # (partition columns live in the hive dirs, not the files)
+    records = file_stats.collect(df, job, scols, recursive=True)
     adds = []
-    for r in stats_rows:
-        # input_file_name() is a URI: decode %-escapes to the
-        # on-disk name (hive value escaping decodes separately).
-        # Footer-sourced rows already carry the raw on-disk path —
-        # a second unquote would corrupt hive-escaped dir names.
-        if r["__path"].startswith("file:"):
-            src = _up.unquote(re.sub(r"^file:/*", "/", r["__path"]))
-        else:
-            src = r["__path"]
+    for fs in records:
+        src = fs.path
         rel_dir = os.path.relpath(os.path.dirname(src), job)
         pv: dict[str, str | None] = {}
         if pcols:
@@ -1892,17 +1793,7 @@ def _stage_data_files(
                     "partitionValues": pv,
                     "size": os.path.getsize(target),
                     "dataChange": True,
-                    "stats": json.dumps(
-                        {
-                            "numRecords": r["__rows"],
-                            "minValues": {
-                                c: jsonable(r[f"__mn_{c}"]) for c in scols
-                            },
-                            "maxValues": {
-                                c: jsonable(r[f"__mx_{c}"]) for c in scols
-                            },
-                        }
-                    ),
+                    "stats": file_stats.delta_stats(fs, scols),
                 }
             }
         )
@@ -2116,18 +2007,10 @@ def write_delta(
     import uuid as _uuid
 
     pcols = list(partition_by or [])
-    prim = (
-        T.LongType, T.IntegerType, T.ShortType, T.ByteType,
-        T.DoubleType, T.FloatType, T.StringType, T.DateType,
-    )
     scols = (
         stats_cols
         if stats_cols is not None
-        else [
-            f.name
-            for f in df.schema.fields
-            if isinstance(f.dataType, prim) and f.name not in pcols
-        ]
+        else file_stats.default_cols(df.schema, pcols)
     )
     ccols = list(cluster_by or [])
     if ccols:
@@ -2306,7 +2189,7 @@ def write_delta(
     if mode0 == "name":
         # stage under PHYSICAL names — data files, hive partition
         # dirs, partitionValues and stats all key physical on a
-        # mapped table, exactly what _dml_scan / _stats_allows /
+        # mapped table, exactly what _dml_scan / file-stats pruning /
         # read_delta's explicit-physical-schema scan resolve
         present = set(df.columns)
         sub = T.StructType(
@@ -2900,7 +2783,7 @@ def _physical_frame(
     """LOGICAL rows → the PHYSICAL layout staging must write under
     columnMapping mode=name (data files and hive partition dirs
     carry physical names; stats and partitionValues key by them too,
-    which is exactly what the read path's ``_stats_allows`` and
+    which is exactly what the read path's stats pruning and
     partition pruning expect). mode=none is the identity."""
     if mode == "none":
         return df
@@ -3143,10 +3026,6 @@ def _dml_delta(
                 upd = old_rows
             for k, e in setc.items():
                 upd = upd.withColumn(k, e)
-            prim = (
-                T.LongType, T.IntegerType, T.ShortType, T.ByteType,
-                T.DoubleType, T.FloatType, T.StringType, T.DateType,
-            )
             _enforce_constraints(upd, meta, "update_delta")
             phys_by_logical = {
                 f.name: (
@@ -3155,9 +3034,8 @@ def _dml_delta(
                 for f in schema.fields
             }
             uscols = [
-                phys_by_logical[f.name]
-                for f in schema.fields
-                if isinstance(f.dataType, prim) and f.name not in pcols
+                phys_by_logical[c]
+                for c in file_stats.default_cols(schema, pcols)
             ]
             new_adds = _stage_data_files(
                 spark,
@@ -3937,18 +3815,13 @@ def merge_delta(
         cdf_on = str(
             conf.get("delta.enableChangeDataFeed", "")
         ).lower() == "true"
-        prim = (
-            T.LongType, T.IntegerType, T.ShortType, T.ByteType,
-            T.DoubleType, T.FloatType, T.StringType, T.DateType,
-        )
         phys_by_logical = {
             f.name: (_physical_name(f) if mode == "name" else f.name)
             for f in schema.fields
         }
         scols = [
-            phys_by_logical[f.name]
-            for f in schema.fields
-            if isinstance(f.dataType, prim) and f.name not in pcols
+            phys_by_logical[c]
+            for c in file_stats.default_cols(schema, pcols)
         ]
         src = source.select(*tcols).persist()
         dup = (
@@ -4208,18 +4081,13 @@ def compact_delta_dvs(
             return latest, 0
         pcols = meta.get("partitionColumns") or []
         schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-        prim = (
-            T.LongType, T.IntegerType, T.ShortType, T.ByteType,
-            T.DoubleType, T.FloatType, T.StringType, T.DateType,
-        )
         phys_by_logical = {
             f.name: (_physical_name(f) if mode == "name" else f.name)
             for f in schema.fields
         }
         scols = [
-            phys_by_logical[f.name]
-            for f in schema.fields
-            if isinstance(f.dataType, prim) and f.name not in pcols
+            phys_by_logical[c]
+            for c in file_stats.default_cols(schema, pcols)
         ]
         rt = _row_tracking(meta)
         scan, _old = _dml_scan(
@@ -4374,56 +4242,6 @@ def _snapshot_schema_mapping(
     return types, list(meta.get("partitionColumns") or []), phys, mode
 
 
-def _zorder_stats_from_log(
-    chosen: dict,
-    zorder_by: list[str],
-    dtypes: dict[str, str],
-    phys_by_logical: dict[str, str],
-) -> dict | None:
-    """Global min/max for the z-order normalization, folded from the
-    chosen files' own ``add.stats`` — the log already carries exact
-    per-file min/max, so the dedicated stats scan is pure re-reading
-    (guide §1.2). Only taken when it is provably identical to the
-    scan: integer columns (JSON numbers round-trip exactly; the
-    cast-to-double of the global min equals the min of casts by
-    monotonicity) and no deletion vectors on any chosen file (DV'd
-    rows are dropped by the rewrite scan but INCLUDED in file stats,
-    which could widen the span). Anything else → None → scan."""
-    ints = {"bigint", "int", "smallint", "tinyint"}
-    if any(dtypes.get(c) not in ints for c in zorder_by):
-        return None
-    out: dict[str, float] = {}
-    phys = {c: phys_by_logical.get(c, c) for c in zorder_by}
-    for a in chosen.values():
-        if a.get("deletionVector"):
-            return None
-        raw = a.get("stats")
-        if not raw:
-            return None
-        try:
-            st = json.loads(raw) if isinstance(raw, str) else dict(raw)
-        except (TypeError, ValueError):
-            return None
-        for c in zorder_by:
-            mn = (st.get("minValues") or {}).get(phys[c])
-            mx = (st.get("maxValues") or {}).get(phys[c])
-            if (
-                not isinstance(mn, int)
-                or not isinstance(mx, int)
-                or isinstance(mn, bool)
-                or isinstance(mx, bool)
-            ):
-                return None
-            k_mn, k_mx = f"mn_{c}", f"mx_{c}"
-            if k_mn not in out or mn < out[k_mn]:
-                out[k_mn] = mn
-            if k_mx not in out or mx > out[k_mx]:
-                out[k_mx] = mx
-    if not out:
-        return None
-    return {k: float(v) for k, v in out.items()}
-
-
 def optimize_delta(
     spark: SparkSession,
     dest: str,
@@ -4455,7 +4273,6 @@ def optimize_delta(
     ``(version, {"files_removed": r, "files_added": a})``; nothing
     to do → no commit. ``n_files`` overrides the size-derived file
     count (explicit layout control; tests pin skipping with it)."""
-    from dataflowex_spark.sources import zorder_key
 
     while True:
         meta, adds = _snapshot(spark, dest, None)
@@ -4493,15 +4310,7 @@ def optimize_delta(
         pcols = meta.get("partitionColumns") or []
         schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
         dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
-        prim = (
-            T.LongType, T.IntegerType, T.ShortType, T.ByteType,
-            T.DoubleType, T.FloatType, T.StringType, T.DateType,
-        )
-        scols = [
-            f.name
-            for f in schema.fields
-            if isinstance(f.dataType, prim) and f.name not in pcols
-        ]
+        scols = file_stats.default_cols(schema, pcols)
         scan, _old = _dml_scan(
             spark,
             dest,
@@ -4539,83 +4348,31 @@ def optimize_delta(
         total = sum(int(a.get("size") or 0) for a in chosen.values())
         if n_files is None:
             n_files = max(1, -(-total // target))
+        phys_by_logical = {
+            f.name: (_physical_name(f) if mode == "name" else f.name)
+            for f in schema.fields
+        }
         if zorder_by:
             for c in zorder_by:
                 if c not in dtypes:
                     raise ValueError(f"zorder column {c!r} not in schema")
-                if dtypes[c] not in (
-                    "bigint", "int", "smallint", "tinyint",
-                    "double", "float", "date", "timestamp",
-                    "timestamp_ntz",
-                ):
-                    raise ValueError(
-                        f"zorder column {c!r}: non-orderable-numeric "
-                        f"type {dtypes[c]}; derive a numeric rank "
-                        "upstream"
-                    )
-
-            def as_num(c):
-                dt = dtypes[c]
-                if dt.startswith("timestamp"):
-                    return F.unix_micros(
-                        F.col(c).cast("timestamp")
-                    ).cast("double")
-                if dt == "date":
-                    return F.unix_date(F.col(c)).cast("double")
-                return F.col(c).cast("double")
-
-            bits = 12
-            stats = _zorder_stats_from_log(
-                chosen,
+            # the log's own add.stats fold the normalization bounds
+            # when they provably equal the rewrite scan's agg
+            zcols = {
+                c: (phys_by_logical[c], file_stats.kind_of(dtypes[c]))
+                for c in zorder_by
+            }
+            bounds = file_stats.zorder_bounds(
+                [file_stats.from_delta(a, zcols) for a in chosen.values()],
+                rows,
                 zorder_by,
-                dtypes,
-                {
-                    f.name: (
-                        _physical_name(f) if mode == "name" else f.name
-                    )
-                    for f in schema.fields
-                },
             )
-            if stats is None:
-                stats = rows.agg(
-                    *[
-                        F.min(as_num(c)).alias(f"mn_{c}")
-                        for c in zorder_by
-                    ],
-                    *[
-                        F.max(as_num(c)).alias(f"mx_{c}")
-                        for c in zorder_by
-                    ],
-                ).first()
-            top = (1 << bits) - 1
-            norm = []
-            for c in zorder_by:
-                mn, mx = stats[f"mn_{c}"], stats[f"mx_{c}"]
-                span = (
-                    (mx - mn)
-                    if (mn is not None and mx is not None and mx > mn)
-                    else 1.0
-                )
-                scaled = F.floor(
-                    (
-                        F.coalesce(as_num(c), F.lit(mn or 0.0))
-                        - F.lit(mn or 0.0)
-                    )
-                    * (top / span)
-                )
-                norm.append(
-                    F.least(F.greatest(scaled, F.lit(0)), F.lit(top))
-                )
-            zk = zorder_key(norm, bits)
+            zk = file_stats.zorder_sort_key(dtypes, zorder_by, bounds)
             rows = rows.repartitionByRange(
                 n_files, zk
             ).sortWithinPartitions(zk)
         else:
             rows = rows.coalesce(n_files)
-        phys_by_logical = {
-            f.name: (_physical_name(f) if mode == "name" else f.name)
-            for f in schema.fields
-        }
         new_adds = _stage_data_files(
             spark,
             dest,
@@ -4786,54 +4543,18 @@ def convert_to_delta(
             raise ValueError(
                 f"partition column {c!r} not derivable from layout"
             )
-    prim = (
-        T.LongType, T.IntegerType, T.ShortType, T.ByteType,
-        T.DoubleType, T.FloatType, T.StringType, T.DateType,
-    )
     scols = (
         stats_cols
         if stats_cols is not None
-        else [
-            f.name
-            for f in df.schema.fields
-            if isinstance(f.dataType, prim) and f.name not in pcols
-        ]
+        else file_stats.default_cols(df.schema, pcols)
     )
-    from dataflowex_spark.sources.footer_stats import footer_file_stats
-
-    # in-place convert registers FOREIGN files — their footers carry
-    # the same stats a re-scan would compute; fall back to the
-    # distributed scan when they can't reproduce it exactly. The
-    # explicit list keeps the registered file set byte-identical to
-    # the walk above (incl. underscore-prefixed names).
-    stats_rows = footer_file_stats(path, scols, paths=files)
-    if stats_rows is not None:
-        stats_rows = [{**r, "__path": r["path"]} for r in stats_rows]
-    else:
-        aggs = [F.count(F.lit(1)).alias("__rows")]
-        for c in scols:
-            aggs.append(F.min(c).alias(f"__mn_{c}"))
-            aggs.append(F.max(c).alias(f"__mx_{c}"))
-        stats_rows = [
-            r.asDict()
-            for r in df.groupBy(F.input_file_name().alias("__path"))
-            .agg(*aggs)
-            .collect()
-        ]
-
-    def jsonable(v):
-        import datetime
-
-        if isinstance(v, (datetime.date, datetime.datetime)):
-            return v.isoformat()
-        return v
-
+    # in-place convert registers FOREIGN files; the explicit list
+    # keeps the registered file set byte-identical to the walk above
+    # (incl. underscore-prefixed names)
+    records = file_stats.collect(df, path, scols, paths=files, scan=df)
     adds = []
-    for r in stats_rows:
-        if r["__path"].startswith("file:"):
-            src = _up.unquote(re.sub(r"^file:/*", "/", r["__path"]))
-        else:
-            src = r["__path"]
+    for fs in records:
+        src = fs.path
         rel = os.path.relpath(src, path)
         pv: dict[str, str | None] = {}
         for seg in os.path.dirname(rel).split(os.sep):
@@ -4857,20 +4578,8 @@ def convert_to_delta(
                     "partitionValues": pv,
                     "size": os.path.getsize(src),
                     "dataChange": True,
-                    "stats": json.dumps(
-                        {
-                            "numRecords": r["__rows"],
-                            "minValues": {
-                                c: jsonable(r[f"__mn_{c}"])
-                                for c in scols
-                                if r[f"__mn_{c}"] is not None
-                            },
-                            "maxValues": {
-                                c: jsonable(r[f"__mx_{c}"])
-                                for c in scols
-                                if r[f"__mx_{c}"] is not None
-                            },
-                        }
+                    "stats": file_stats.delta_stats(
+                        fs, scols, drop_nulls=True
                     ),
                 }
             }

@@ -76,6 +76,7 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dataflowex_spark.sources import file_stats
 from dataflowex_spark.sources.avro_io import read_container
 from dataflowex_spark.sources.commit_backend import get_commit_backend
 
@@ -1074,13 +1075,7 @@ def read_iceberg(
         fields = {
             f["name"]: f for f in _current_schema_fields(meta)
         }
-        for col, op, _v in specs:
-            if op not in ("=", "<", "<=", ">", ">="):
-                raise ValueError(f"skip_where op {op!r} unsupported")
-            if col not in fields:
-                raise ValueError(
-                    f"skip_where column {col!r} not in schema"
-                )
+        file_stats.validate_skip_where(specs, fields)
     (
         live, pos_deletes, eq_deletes, bounds, partitions, formats,
     ) = _live_files(
@@ -1090,17 +1085,26 @@ def read_iceberg(
         prune=(specs, fields) if specs else None,
     )
     if specs:
+        tz = file_stats.session_tz(spark)
+        cols = {c for c, _op, _v in specs}
+
+        def stats_allow(path: str) -> bool:
+            st = file_stats.from_iceberg(bounds.get(path), fields, cols)
+            return all(
+                file_stats.may_match(st, c, op, v, tz) for c, op, v in specs
+            )
+
         live = {
             path: seq
             for path, seq in live.items()
-            if _bounds_allow(bounds.get(path), specs, fields)
+            if stats_allow(path)
             and _partition_tuple_allows(
                 partitions.get(path), specs, fields, meta
             )
         }
     if not live:
         out = _empty_frame(spark, meta)
-        return _apply_iceberg_skip_filter(out, specs)
+        return file_stats.skip_filter(out, specs)
     # group data files by (sequence number, field-id rename map) —
     # equality deletes apply only to rows whose DATA sequence is
     # STRICTLY LOWER than the delete's (spec: a delete cannot remove
@@ -1285,67 +1289,7 @@ def read_iceberg(
                     F.col(f"__d.{c}")
                 )
             df = left.join(F.broadcast(dels), cond, "left_anti")
-    return _apply_iceberg_skip_filter(df.select(*cols), specs)
-
-
-def _bounds_allow(
-    file_bounds: tuple[dict, dict] | None,
-    specs: list[tuple],
-    fields: dict[str, dict],
-) -> bool:
-    """Can any row in a data file match the conjunction? Missing
-    bounds (whole file or per column) answer True — skipping may
-    only prune provably-dead files."""
-    if file_bounds is None:
-        return True
-    lower, upper = file_bounds
-    for col, op, v in specs:
-        f = fields[col]
-        fid = f.get("id")
-        t = f.get("type")
-        if fid is None or not isinstance(t, str):
-            continue
-        lo_raw, hi_raw = lower.get(fid), upper.get(fid)
-        if lo_raw is None or hi_raw is None:
-            continue
-        try:
-            lo = bound_decode(bytes(lo_raw), t)
-            hi = bound_decode(bytes(hi_raw), t)
-            if op == "=" and not (lo <= v <= hi):
-                return False
-            if op == "<" and not (lo < v):
-                return False
-            if op == "<=" and not (lo <= v):
-                return False
-            if op == ">" and not (hi > v):
-                return False
-            if op == ">=" and not (hi >= v):
-                return False
-        except (IcebergProtocolError, TypeError, ValueError):
-            continue  # undecodable/incomparable: keep the file
-    return True
-
-
-def _apply_iceberg_skip_filter(
-    df: DataFrame, specs: list[tuple]
-) -> DataFrame:
-    """Apply the skip_where conjunction IN-PLAN — pruning reduces
-    I/O; this keeps semantics exact for files kept on missing
-    bounds."""
-    from pyspark.sql import functions as F
-
-    for col, op, v in specs:
-        c = F.col(col)
-        df = df.filter(
-            {
-                "=": c == v,
-                "<": c < v,
-                "<=": c <= v,
-                ">": c > v,
-                ">=": c >= v,
-            }[op]
-        )
-    return df
+    return file_stats.skip_filter(df.select(*cols), specs)
 
 
 # ---------------------------------------------------------------------
@@ -2252,6 +2196,8 @@ def export_snapshot_to_iceberg(
                 "type": _iceberg_type(f.dataType, alloc),
             }
         )
+    by_name = {f["name"]: f for f in top}
+    stats = {st.path: st for st in table._stats(m, version)}
     entries = []
     for e in sorted(m["files"], key=lambda x: x["path"]):
         # name by the MTable file's own basename (unique per write
@@ -2261,7 +2207,7 @@ def export_snapshot_to_iceberg(
         target = os.path.join(dest, name)
         if not os.path.exists(target):
             os.link(e["path"], target)
-        lo, hi = _mtable_bounds(e, m["key_col"], top)
+        lo, hi = file_stats.iceberg_bounds(stats[e["path"]], by_name)
         entries.append(
             {
                 "status": 1,  # ADDED
@@ -2382,7 +2328,8 @@ def export_iceberg_increment(
             os.path.join(dest, "data", os.path.basename(src_path))
         )
 
-    top_fields = _current_schema_fields(meta)
+    by_name = {f["name"]: f for f in _current_schema_fields(meta)}
+    stats = {st.path: st for st in table._stats(m_to, to_v)}
     entries = []
     for e in sorted(m_to["files"], key=lambda x: x["path"]):
         if e["path"] in paths_from:
@@ -2390,7 +2337,7 @@ def export_iceberg_increment(
         target = dest_name(e["path"])
         if not os.path.exists(target):
             os.link(e["path"], target)
-        lo, hi = _mtable_bounds(e, m_to["key_col"], top_fields)
+        lo, hi = file_stats.iceberg_bounds(stats[e["path"]], by_name)
         entries.append(
             {
                 "status": 1,  # ADDED
@@ -2890,35 +2837,6 @@ def remove_orphan_files(
     return deleted
 
 
-def _mtable_bounds(entry: dict, key_col: str, top_fields: list[dict]):
-    """MTable per-file stats → Iceberg bound maps (field-id →
-    single-value bytes) for the key column and any declared
-    stats_cols that are top-level primitive fields. Returns
-    (lower, upper) as kv-record lists or (None, None) when nothing
-    serializes."""
-    by_name = {
-        f["name"]: f
-        for f in top_fields
-        if isinstance(f.get("type"), str)
-    }
-    stats = {key_col: (entry.get("min_key"), entry.get("max_key"))}
-    for c, mm in (entry.get("col_stats") or {}).items():
-        stats[c] = (mm[0], mm[1])
-    lo, hi = [], []
-    for c, (mn, mx) in stats.items():
-        f = by_name.get(c)
-        if f is None or mn is None or mx is None:
-            continue
-        try:
-            lo.append({"key": f["id"], "value": bound_encode(mn, f["type"])})
-            hi.append({"key": f["id"], "value": bound_encode(mx, f["type"])})
-        except IcebergProtocolError:
-            continue
-    return (lo or None, hi or None)
-
-
-
-
 _IDENTITY_PART_TYPES = ("int", "long", "string", "date")
 
 #: avro storage type per (transform kind, source ice type)
@@ -3035,7 +2953,6 @@ def _stage_iceberg_entries(
     manifest bounds, executor-side avro transcode when asked) and
     return the status=1 manifest entries. Shared by
     :func:`write_iceberg` and :func:`upsert_iceberg`."""
-    import re as _re
     import shutil
     import urllib.parse as _up
     import uuid as _uuid
@@ -3086,39 +3003,13 @@ def _stage_iceberg_entries(
     if pnames:
         w = w.partitionBy(*pnames)
     getattr(w, stage_format)(job)
-    stats_rows = None
-    if stage_format == "parquet":
-        # stats from the footers the write tasks already produced;
-        # orc/avro stages and footer-unfaithful columns fall back to
-        # the distributed re-scan (see footer_stats docstring)
-        from dataflowex_spark.sources.footer_stats import footer_file_stats
-
-        raw = footer_file_stats(job, scols, recursive=True)
-        if raw is not None:
-            stats_rows = [{**r, "__path": r["path"]} for r in raw]
-    if stats_rows is None:
-        aggs = [F.count(F.lit(1)).alias("__rows")]
-        for c in scols:
-            aggs.append(F.min(c).alias(f"__mn_{c}"))
-            aggs.append(F.max(c).alias(f"__mx_{c}"))
-        stats_rows = [
-            r.asDict()
-            for r in getattr(spark.read, stage_format)(job)
-            .drop(*pnames)  # partition values re-derive from paths below
-            .groupBy(F.input_file_name().alias("__path"))
-            .agg(*aggs)
-            .collect()
-        ]
+    records = file_stats.collect(
+        df, job, scols, recursive=True, fmt=stage_format
+    )
     entries = []
     transcode: list[tuple[str, str]] = []
-    for r in stats_rows:
-        # input_file_name() is a URI: decode %-escapes to the
-        # on-disk name (hive value escaping decodes separately).
-        # Footer-sourced rows already carry the raw on-disk path.
-        if r["__path"].startswith("file:"):
-            src = _up.unquote(_re.sub(r"^file:/*", "/", r["__path"]))
-        else:
-            src = r["__path"]
+    for fs in records:
+        src = fs.path
         rel_dir = os.path.relpath(os.path.dirname(src), job)
         ptuple = None
         if pinfo:
@@ -3160,18 +3051,7 @@ def _stage_iceberg_entries(
             transcode.append((src, target))
         else:
             os.replace(src, target)
-        lo, hi = [], []
-        for c in scols:
-            mn, mx = r[f"__mn_{c}"], r[f"__mx_{c}"]
-            if mn is None or mx is None:
-                continue
-            fld = boundable[c]
-            lo.append(
-                {"key": fld["id"], "value": bound_encode(mn, fld["type"])}
-            )
-            hi.append(
-                {"key": fld["id"], "value": bound_encode(mx, fld["type"])}
-            )
+        lo, hi = file_stats.iceberg_bounds(fs, boundable, scols)
         entries.append(
             {
                 "status": 1,
@@ -3181,7 +3061,7 @@ def _stage_iceberg_entries(
                     "content": 0,
                     "file_path": target,
                     "file_format": file_format.upper(),
-                    "record_count": r["__rows"],
+                    "record_count": fs.rows,
                     "file_size_in_bytes": (
                         0  # patched after the distributed transcode
                         if file_format == "avro"

@@ -139,7 +139,7 @@ def sync_delta_uniform(spark: SparkSession, root: str) -> int:
     the whole point of sharing the data files."""
     import json
 
-    from dataflowex_spark.sources import delta_reader as dr
+    from dataflowex_spark.sources import delta_reader as dr, file_stats
     from dataflowex_spark.sources import iceberg_reader as ir
     from dataflowex_spark.sources.avro_io import write_container
 
@@ -240,41 +240,14 @@ def sync_delta_uniform(spark: SparkSession, root: str) -> int:
         new_sid = (snaps0[-1]["snapshot-id"] + 1) if snaps0 else 1
         new_seq = int(imeta.get("last-sequence-number", 0)) + 1
 
-    boundable = {"int", "long", "float", "double", "string"}
+    stat_cols = {
+        f.name: (f.name, file_stats.kind_of(f.dataType)) for f in schema.fields
+    }
     entries = []
     for rel in sorted(adds):
         a = adds[rel]
-        st = {}
-        raw = a.get("stats")
-        if raw:
-            try:
-                st = json.loads(raw) if isinstance(raw, str) else raw
-            except (TypeError, ValueError):
-                st = {}
-        lo, hi = [], []
-        for c, mn in (st.get("minValues") or {}).items():
-            fld = by_name.get(c)
-            mx = (st.get("maxValues") or {}).get(c)
-            if (
-                fld is None
-                or mx is None
-                or mn is None
-                or not isinstance(fld["type"], str)
-                or fld["type"] not in boundable
-            ):
-                continue
-            lo.append(
-                {
-                    "key": fld["id"],
-                    "value": ir.bound_encode(mn, fld["type"]),
-                }
-            )
-            hi.append(
-                {
-                    "key": fld["id"],
-                    "value": ir.bound_encode(mx, fld["type"]),
-                }
-            )
+        fs = file_stats.from_delta(a, stat_cols)
+        lo, hi = file_stats.iceberg_bounds(fs, by_name)
         ptuple = None
         if spec_fields:
             pv = a.get("partitionValues") or {}
@@ -297,7 +270,7 @@ def sync_delta_uniform(spark: SparkSession, root: str) -> int:
                         dr._data_path(root, rel)
                     ),
                     "file_format": "PARQUET",
-                    "record_count": int(st.get("numRecords") or 0),
+                    "record_count": int(fs.rows or 0),
                     "file_size_in_bytes": int(a.get("size") or 0),
                     "equality_ids": None,
                     **(
@@ -305,8 +278,8 @@ def sync_delta_uniform(spark: SparkSession, root: str) -> int:
                         if ptuple is not None
                         else {}
                     ),
-                    "lower_bounds": lo or None,
-                    "upper_bounds": hi or None,
+                    "lower_bounds": lo,
+                    "upper_bounds": hi,
                 },
             }
         )

@@ -59,6 +59,9 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from dataflowex_spark.sources import file_stats
+from dataflowex_spark.sources.file_stats import local_path as _local_path
+
 # Per-file Bloom index geometry (Parquet/Delta "bloom filter index"
 # shape, lifted to the MANIFEST so equality probes prune whole files
 # without opening any footer). 2048 bits / 5 hashes ≈ 1% FPR at ~200
@@ -85,64 +88,6 @@ class MTableCheckViolation(RuntimeError):
     """Data rejected by a declared CHECK constraint — the commit did
     not happen; nothing became visible (orphaned staging files are
     reclaimed by ``vacuum(delete_orphans=True)``)."""
-
-
-def _local_path(uri: str) -> str:
-    """``input_file_name()`` URIs → canonical local paths (strip the
-    ``file:`` scheme, collapse leading slashes, unquote) so manifest
-    entries compare equal to ``os.walk`` paths in :meth:`MTable.vacuum`."""
-    from urllib.parse import unquote
-
-    p = unquote(uri)
-    if p.startswith("file:"):
-        p = p[len("file:") :]
-    while p.startswith("//"):
-        p = p[1:]
-    return os.path.normpath(p)
-
-
-def _jsonable(v):
-    """Manifest stat values must round-trip through JSON and compare
-    correctly at prune time. Primitives pass through; date/datetime
-    become ISO strings (lexicographic == chronological, so range
-    pruning on the string form is exact); anything else goes through
-    str() with the same caveat left to the caller."""
-    if v is None or isinstance(v, (int, float, str, bool)):
-        return v
-    return str(v)
-
-
-def _as_temporal(v):
-    """Interpret a prune operand as a datetime when possible: native
-    date/datetime objects, and the ISO string forms ``str()`` gives
-    them at manifest-write time ('YYYY-MM-DD' vs
-    'YYYY-MM-DD HH:MM:SS[.ffffff]'). Returns None for anything else."""
-    import datetime as dt
-
-    if isinstance(v, dt.datetime):
-        return v
-    if isinstance(v, dt.date):
-        return dt.datetime(v.year, v.month, v.day)
-    if isinstance(v, str):
-        try:
-            return dt.datetime.fromisoformat(v)
-        except ValueError:
-            return None
-    return None
-
-
-def _prune_pair(stat, bound):
-    """Normalize a (file-stat, caller-bound) pair for ordering: when
-    BOTH sides are temporal they compare as datetimes — a DATE stat
-    ('2024-06-01') against a datetime bound ('2024-06-01 00:00:00')
-    would otherwise misorder lexicographically at the exact boundary
-    (the prefix sorts first) and silently prune a file whose rows the
-    residual predicate keeps. Mixed or non-temporal pairs fall back
-    to the JSON-normalized forms."""
-    ts, tb = _as_temporal(stat), _as_temporal(bound)
-    if ts is not None and tb is not None:
-        return ts, tb
-    return _jsonable(stat), _jsonable(bound)
 
 
 def _atomic_write(path: str, content: str) -> None:
@@ -310,49 +255,11 @@ class MTable:
             df = df.repartitionByRange(max(1, n_files), key_col)
         if not bucketed:
             df.write.parquet(job)
-        from dataflowex_spark.sources.footer_stats import footer_file_stats
-
         stat_cols = list(dict.fromkeys([key_col] + scols))
-        raw = footer_file_stats(job, stat_cols)
-        stats = (
-            None
-            if raw is None
-            else [{**r, "rows": r["__rows"]} for r in raw]
-        )
-        if stats is None:
-            # footers can't reproduce the scan exactly (exotic type,
-            # dropped stats, NaN floats) — distributed fallback, the
-            # original full re-read grouped by file
-            aggs = [F.count("*").alias("rows")]
-            for c in stat_cols:
-                aggs.append(F.min(c).alias(f"__mn_{c}"))
-                aggs.append(F.max(c).alias(f"__mx_{c}"))
-            stats = [
-                {**r.asDict(), "path": _local_path(r["path"])}
-                for r in self.spark.read.parquet(job)
-                .groupBy(F.input_file_name().alias("path"))
-                .agg(*aggs)
-                .collect()
-            ]
-        entries = []
-        for r in stats:
-            if r["rows"] == 0:
-                continue
-            e = {
-                "path": r["path"],
-                "rows": r["rows"],
-                "min_key": _jsonable(r[f"__mn_{key_col}"]),
-                "max_key": _jsonable(r[f"__mx_{key_col}"]),
-            }
-            if scols:
-                e["col_stats"] = {
-                    c: [
-                        _jsonable(r[f"__mn_{c}"]),
-                        _jsonable(r[f"__mx_{c}"]),
-                    ]
-                    for c in scols
-                }
-            entries.append(e)
+        entries = [
+            file_stats.to_mtable(fs, key_col, scols)
+            for fs in file_stats.collect(df, job, stat_cols)
+        ]
         bcols = list(bloom_cols or [])
         if bcols:
             reader = self.spark.read.parquet(job)
@@ -708,9 +615,9 @@ class MTable:
         ``col == value`` predicate still applies row-wise and pushes
         into the pruned scans. Columns without a recorded bloom are
         conservatively kept."""
-        conds = self._range_conds(lo, hi, version, where)
+        specs = self._range_specs(lo, hi, version, where)
         eq = dict(eq or {})
-        if not conds and not eq:
+        if not specs and not eq:
             return self.read(version)
         files = self.prune_files(
             lo, hi, version=version, where=where, eq=eq
@@ -722,41 +629,32 @@ class MTable:
             [e for e in self.manifest(version)["files"] if e["path"] in fset],
             version,
         )
-        for c, rlo, rhi, _get in conds:
-            if rlo is not None:
-                out = out.filter(F.col(c) >= F.lit(rlo))
-            if rhi is not None:
-                out = out.filter(F.col(c) <= F.lit(rhi))
-        for c, v in eq.items():
-            out = out.filter(F.col(c) == F.lit(v))
-        return out
+        return file_stats.skip_filter(
+            out, specs + [(c, "=", v) for c, v in eq.items()]
+        )
 
-    def _range_conds(self, lo, hi, version, where):
+    def _range_specs(self, lo, hi, version, where) -> list[tuple]:
+        """``lo``/``hi`` on the key and ``where`` ranges as a
+        ``(col, op, literal)`` conjunction."""
         key_col = self.manifest(version)["key_col"]
-        conds = []  # (col, lo, hi, per-entry stats getter)
-        if lo is not None or hi is not None:
-            conds.append(
-                (key_col, lo, hi, lambda e: (e["min_key"], e["max_key"]))
-            )
-        for c, (clo, chi) in (where or {}).items():
-            if c == key_col:
-                # the merge key's stats live in the entry's
-                # min_key/max_key, not col_stats
-                conds.append(
-                    (c, clo, chi, lambda e: (e["min_key"], e["max_key"]))
-                )
-                continue
-            conds.append(
-                (
-                    c,
-                    clo,
-                    chi,
-                    lambda e, c=c: tuple(
-                        e.get("col_stats", {}).get(c, (None, None))
-                    ),
-                )
-            )
-        return conds
+        specs = []
+        for c, (clo, chi) in [(key_col, (lo, hi)), *(where or {}).items()]:
+            if clo is not None:
+                specs.append((c, ">=", clo))
+            if chi is not None:
+                specs.append((c, "<=", chi))
+        return specs
+
+    def _stats(self, m: dict, version: int | None = None) -> list:
+        """The manifest's files as typed stats records."""
+        schema = self.table_schema(version)
+        kinds = {
+            f.name: file_stats.kind_of(f.dataType)
+            for f in (schema.fields if schema is not None else [])
+        }
+        return [
+            file_stats.from_mtable(e, m["key_col"], kinds) for e in m["files"]
+        ]
 
     def _bloom_probe_positions(self, col: str, value, version=None):
         """The ``BLOOM_HASHES`` bit positions a literal probe value
@@ -797,41 +695,31 @@ class MTable:
         # the column happens to carry range stats (the key, or a
         # declared stats col) min/max containment prunes too — the
         # two mechanisms compose conjunctively
-        ranges = dict(where or {})
-        ranges.update({c: (v, v) for c, v in (eq or {}).items()})
-        conds = self._range_conds(lo, hi, version, ranges or None)
+        m = self.manifest(version)
+        specs = self._range_specs(lo, hi, version, where)
+        specs += [(c, "=", v) for c, v in (eq or {}).items()]
         eq_probes = [
             (c, self._bloom_probe_positions(c, v, version))
             for c, v in (eq or {}).items()
         ]
+        tz = file_stats.session_tz(self.spark)
 
-        def keep(e: dict) -> bool:
+        def keep(e: dict, st) -> bool:
             for c, positions in eq_probes:
                 words = e.get("blooms", {}).get(c)
                 if words is None:
                     continue  # no bloom recorded -> cannot exclude
                 if not _bloom_member(words, positions):
                     return False
-            for _c, rlo, rhi, get in conds:
-                mn, mx = get(e)
-                if mn is None or mx is None:
-                    continue  # no stats -> cannot exclude
-                # each (stat, bound) pair is normalized to a
-                # like-typed ordering — temporal pairs as datetimes
-                # (date-vs-datetime granularity would misorder as
-                # strings at the boundary), everything else through
-                # the JSON form the stats were written with
-                if rhi is not None:
-                    smn, bhi = _prune_pair(mn, rhi)
-                    if smn > bhi:
-                        return False
-                if rlo is not None:
-                    smx, blo = _prune_pair(mx, rlo)
-                    if smx < blo:
-                        return False
-            return True
+            return all(
+                file_stats.may_match(st, c, op, v, tz) for c, op, v in specs
+            )
 
-        return [e["path"] for e in self.manifest(version)["files"] if keep(e)]
+        return [
+            e["path"]
+            for e, st in zip(m["files"], self._stats(m, version))
+            if keep(e, st)
+        ]
 
     def history(self) -> list[dict]:
         """One summary row per kept version (oldest first): version,
@@ -897,18 +785,20 @@ class MTable:
                     "are bounds, not exact values; fold first or scan"
                 )
             return out
+        recs = self._stats(m, version)
         if files:
-            out["min_key"] = min(e["min_key"] for e in files)
-            out["max_key"] = max(e["max_key"] for e in files)
+            out["min_key"], out["max_key"] = file_stats.span(
+                recs, m["key_col"]
+            )
         for c in wanted:
-            stats = [e.get("col_stats", {}).get(c) for e in files]
-            if any(s is None for s in stats) or not stats:
+            if not files or any(
+                c not in e.get("col_stats", {}) for e in files
+            ):
                 raise ValueError(
                     f"metadata_agg: no per-file stats for {c!r} — "
                     "create/compact the table with stats_cols"
                 )
-            out[f"min_{c}"] = min(s[0] for s in stats)
-            out[f"max_{c}"] = max(s[1] for s in stats)
+            out[f"min_{c}"], out[f"max_{c}"] = file_stats.span(recs, c)
         return out
 
     def add_check(self, name: str, expr: str) -> int:
@@ -1218,36 +1108,19 @@ class MTable:
         # per-file max_key bounds (sorted upper bounds; insert-only
         # keys above every range join the last bucket, below the
         # first range the first) — no repartitionByRange sampling
-        # pass, so the merged frame is computed ONCE. Temporal /
-        # exotic key stats are stored as strings in the manifest and
-        # can't be compared against the column directly; those tables
-        # keep the sampled range write.
-        kt = {
-            f.name: f.dataType.simpleString() for f in merged.schema.fields
-        }[key_col]
-        maxes = [e["max_key"] for e in affected]
-        numeric = kt in ("bigint", "int", "smallint", "tinyint",
-                         "double", "float")
-        bounds_ok = bool(affected) and all(
-            mx is not None for mx in maxes
-        ) and (
-            (
-                numeric
-                and all(
-                    isinstance(mx, (int, float))
-                    and not isinstance(mx, bool)
-                    for mx in maxes
-                )
-            )
-            or (kt == "string" and all(isinstance(mx, str) for mx in maxes))
-        )
+        # pass, so the merged frame is computed ONCE. Keys whose stats
+        # are no Spark literal (temporal, exotic) keep the sampled
+        # range write.
+        affected_stats = [
+            st for st in self._stats(m) if st.path in affected_paths
+        ]
         new_entries = self._write_data_files(
             merged,
             key_col,
             n_files=max(1, len(affected)),
             stats_cols=m.get("stats_cols"),
             bloom_cols=m.get("bloom_cols"),
-            range_bounds=sorted(maxes)[:-1] if bounds_ok else None,
+            range_bounds=file_stats.range_bounds(affected_stats, key_col),
         )
         self._validate_new_files(new_entries)
         return self._commit(
@@ -1554,8 +1427,6 @@ class MTable:
         ``bits``-bit rank space (same shape as
         ``sources.write_zordered``); the rewrite is a single
         distributed pass."""
-        from dataflowex_spark.sources import zorder_key
-
         m = self.manifest()
         key_col = m["key_col"]
         zcols = [key_col] + [c for c in cols if c != key_col]
@@ -1563,138 +1434,23 @@ class MTable:
             set(m.get("stats_cols", [])) | {c for c in cols if c != key_col}
         )
         df = self.read()
-        dtypes = dict(df.dtypes)
-
-        def as_num(c: str):
-            # order-preserving numeric surrogate per type: Morton
-            # interleave needs ranks, not the raw values
-            dt = dtypes[c]
-            if dt.startswith("timestamp"):
-                return F.unix_micros(F.col(c).cast("timestamp")).cast(
-                    "double"
-                )
-            if dt == "date":
-                return F.unix_date(F.col(c)).cast("double")
-            if dt in ("string", "binary", "boolean") or dt.startswith(
-                ("array", "map", "struct")
-            ):
-                raise ValueError(
-                    f"optimize_zorder: column {c!r} has non-orderable-"
-                    f"numeric type {dt}; derive a numeric rank column "
-                    "upstream (e.g. a dictionary code) and cluster on that"
-                )
-            return F.col(c).cast("double")
-
-        # the manifest already carries exact per-file min/max for the
-        # key and every declared stats column — fold the global
-        # bounds on the driver instead of a dedicated full-table agg
-        # (guide §1.2; the discipline optimize_zorder_incremental
-        # already applies). Only when provably identical to the scan;
-        # otherwise fall back.
-        stats = self._zorder_stats_from_manifest(m, zcols, dtypes)
-        if stats is None:
-            stats = df.agg(
-                *[F.min(as_num(c)).alias(f"mn_{c}") for c in zcols],
-                *[F.max(as_num(c)).alias(f"mx_{c}") for c in zcols],
-            ).first()
-        top = (1 << bits) - 1
-        norm = []
-        for c in zcols:
-            mn, mx = stats[f"mn_{c}"], stats[f"mx_{c}"]
-            span = (
-                (mx - mn)
-                if (mn is not None and mx is not None and mx > mn)
-                else 1.0
-            )
-            scaled = F.floor(
-                (
-                    F.coalesce(as_num(c), F.lit(mn or 0.0))
-                    - F.lit(mn or 0.0)
-                )
-                * (top / span)
-            )
-            norm.append(F.least(F.greatest(scaled, F.lit(0)), F.lit(top)))
+        # the manifest's per-file stats fold the global bounds on the
+        # driver when they provably equal a full-table agg (guide
+        # §1.2); otherwise that agg runs
+        bounds = file_stats.zorder_bounds(self._stats(m), df, zcols)
         entries = self._write_data_files(
             df,
             key_col,
             n_files=n_files or len(m["files"]),
             stats_cols=stats_cols,
-            sort_expr=zorder_key(norm, bits),
+            sort_expr=file_stats.zorder_sort_key(
+                dict(df.dtypes), zcols, bounds, bits
+            ),
             bloom_cols=m.get("bloom_cols"),
         )
         return self._commit(
             entries, key_col, parent=m["version"], stats_cols=stats_cols
         )
-
-    def _zorder_stats_from_manifest(
-        self, m: dict, zcols: list[str], dtypes: dict[str, str]
-    ) -> dict | None:
-        """Global min/max for the z-order normalization folded from
-        the manifest's per-file stats, or None when the scan result
-        could differ. MTable files have no deletion side-channel
-        (every manifest row is live), so stats exactly cover the
-        data; the remaining exactness question is the numeric
-        SURROGATE: integers round-trip through the JSON manifest
-        exactly; dates reconstruct `unix_date` as exact day counts
-        from their ISO strings; timestamps reconstruct `unix_micros`
-        from their rendered string ONLY under a UTC session (the
-        string was rendered in the writing session's zone). Anything
-        else — floats (repr trips), strings, or missing per-file
-        stats — falls back to the aggregate scan."""
-        import datetime as _dt
-
-        ints = {"bigint", "int", "smallint", "tinyint"}
-        utc = (
-            self.spark.conf.get("spark.sql.session.timeZone", "") == "UTC"
-        )
-        for c in zcols:
-            t = dtypes.get(c)
-            if t in ints or t == "date" or (
-                t in ("timestamp", "timestamp_ntz") and utc
-            ):
-                continue
-            return None
-
-        def to_num(v, t):
-            if t in ints:
-                if isinstance(v, bool) or not isinstance(v, int):
-                    return None
-                return float(v)
-            if not isinstance(v, str):
-                return None
-            try:
-                if t == "date":
-                    d = _dt.date.fromisoformat(v)
-                    return float((d - _dt.date(1970, 1, 1)).days)
-                td = _dt.datetime.fromisoformat(v) - _dt.datetime(
-                    1970, 1, 1
-                )
-                return float(
-                    (td.days * 86_400 + td.seconds) * 1_000_000
-                    + td.microseconds
-                )
-            except ValueError:
-                return None
-
-        key_col = m["key_col"]
-        out: dict[str, float] = {}
-        for e in m["files"]:
-            for c in zcols:
-                if c == key_col:
-                    raw = (e.get("min_key"), e.get("max_key"))
-                else:
-                    raw = tuple(
-                        (e.get("col_stats") or {}).get(c, (None, None))
-                    )
-                mn, mx = (to_num(raw[0], dtypes[c]), to_num(raw[1], dtypes[c]))
-                if mn is None or mx is None:
-                    return None
-                k_mn, k_mx = f"mn_{c}", f"mx_{c}"
-                if k_mn not in out or mn < out[k_mn]:
-                    out[k_mn] = mn
-                if k_mx not in out or mx > out[k_mx]:
-                    out[k_mx] = mx
-        return out or None
 
     def optimize_zorder_incremental(
         self,
@@ -1735,46 +1491,24 @@ class MTable:
 
         DV-aware like merge: a rewritten file contributes only its
         live rows and sheds its deletion vector."""
-        from dataflowex_spark.sources import zorder_key
-
         m = self.manifest()
         key_col = m["key_col"]
         zcols = [key_col] + [c for c in cols if c != key_col]
         files = m["files"]
         if not files:
             return None, 0
-
-        def dim_bounds(c: str):
-            if c == key_col:
-                vals = [(e["min_key"], e["max_key"]) for e in files]
-            else:
-                vals = [
-                    tuple(e.get("col_stats", {}).get(c, (None, None)))
-                    for e in files
-                ]
-            known = [v for v in vals if v[0] is not None]
-            if not known:
-                return None, None
-            return min(v[0] for v in known), max(v[1] for v in known)
-
-        bounds = {c: dim_bounds(c) for c in zcols}
+        stats = {st.path: st for st in self._stats(m)}
+        bounds = file_stats.fold(list(stats.values()), zcols, exact=False)
 
         def score(e: dict) -> float:
             s = 1.0
+            own = file_stats.fold([stats[e["path"]]], zcols, exact=False)
             for c in zcols:
                 lo, hi = bounds[c]
-                if lo is None or hi is None or hi <= lo:
-                    continue
-                if c == key_col:
-                    fmn, fmx = e["min_key"], e["max_key"]
-                else:
-                    fmn, fmx = e.get("col_stats", {}).get(c, (None, None))
-                if fmn is None:
+                fmn, fmx = own[c]
+                if lo is None or hi <= lo or fmn is None:
                     continue  # unknown dim: span fraction 1 (worst)
-                try:
-                    s *= max(0.0, min(1.0, (fmx - fmn) / (hi - lo)))
-                except TypeError:
-                    continue  # non-numeric stats: skip dimension
+                s *= max(0.0, min(1.0, (fmx - fmn) / (hi - lo)))
             return s
 
         # Convergence is STRUCTURAL, not score-threshold-based: files
@@ -1800,36 +1534,14 @@ class MTable:
             set(m.get("stats_cols", [])) | {c for c in zcols if c != key_col}
         )
         df = self._read_entries(todo)
-        dtypes = dict(df.dtypes)
-
-        def as_num(c: str):
-            dt = dtypes[c]
-            if dt.startswith("timestamp"):
-                return F.unix_micros(F.col(c).cast("timestamp")).cast(
-                    "double"
-                )
-            if dt == "date":
-                return F.unix_date(F.col(c)).cast("double")
-            return F.col(c).cast("double")
-
-        top = (1 << bits) - 1
-        norm = []
-        for c in zcols:
-            lo, hi = bounds[c]
-            lo = float(lo) if lo is not None else 0.0
-            hi = float(hi) if hi is not None else 1.0
-            span = (hi - lo) if hi > lo else 1.0
-            scaled = F.floor(
-                (F.coalesce(as_num(c), F.lit(lo)) - F.lit(lo))
-                * (top / span)
-            )
-            norm.append(F.least(F.greatest(scaled, F.lit(0)), F.lit(top)))
         entries = self._write_data_files(
             df,
             key_col,
             n_files=len(todo),
             stats_cols=stats_cols,
-            sort_expr=zorder_key(norm, bits),
+            sort_expr=file_stats.zorder_sort_key(
+                dict(df.dtypes), zcols, bounds, bits
+            ),
             bloom_cols=m.get("bloom_cols"),
         )
         self._validate_new_files(entries)

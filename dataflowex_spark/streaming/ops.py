@@ -45,11 +45,17 @@ def _bounded_state_scope(spark: SparkSession):
     if raw == "-1":
         yield
         return
-    n = (
-        max(1, int(raw))
-        if raw
-        else min(8, spark.sparkContext.defaultParallelism)
-    )
+    if not raw:
+        n = min(8, spark.sparkContext.defaultParallelism)
+    else:
+        try:
+            n = max(1, int(raw))
+        except ValueError:
+            raise ValueError(
+                f"SPARK_GRAFT_STREAM_STATE_PARTS={raw!r} is not an "
+                "integer (a state-store count, or -1 to keep the "
+                "session's spark.sql.shuffle.partitions)"
+            ) from None
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:

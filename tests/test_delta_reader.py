@@ -3057,13 +3057,15 @@ def test_sync_delta_uniform(spark, tmp_path):
 
 
 def test_zorder_stats_from_log_matches_scan(spark, tmp_path):
-    """The z-order normalization min/max folded from add.stats must
-    equal the scan aggregate exactly for integer columns, and must
-    refuse (None -> scan fallback) for float columns and DV'd files,
-    where metadata could diverge from the live rows."""
+    """The z-order normalization min/max folded from add.stats
+    (file_stats.fold over from_delta records) must equal the scan
+    aggregate exactly for integer columns, and must refuse (None ->
+    scan fallback) for float columns and DV'd files, where metadata
+    could diverge from the live rows."""
     from pyspark.sql import functions as F
 
     import dataflowex_spark.sources.delta_reader as dr
+    from dataflowex_spark.sources import file_stats
 
     dest = str(tmp_path / "t")
     df = spark.createDataFrame(
@@ -3074,8 +3076,14 @@ def test_zorder_stats_from_log_matches_scan(spark, tmp_path):
     meta, adds = dr._snapshot(spark, dest, None)
     schema = df.schema
     dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
-    phys = {f.name: f.name for f in schema.fields}
-    got = dr._zorder_stats_from_log(adds, ["k", "a"], dtypes, phys)
+
+    def fold(adds, cols):
+        spec = {c: (c, file_stats.kind_of(dtypes[c])) for c in cols}
+        return file_stats.fold(
+            [file_stats.from_delta(a, spec) for a in adds.values()], cols
+        )
+
+    got = fold(adds, ["k", "a"])
     scan = dr.read_delta(spark, dest).agg(
         F.min(F.col("k").cast("double")).alias("mn_k"),
         F.max(F.col("k").cast("double")).alias("mx_k"),
@@ -3083,15 +3091,13 @@ def test_zorder_stats_from_log_matches_scan(spark, tmp_path):
         F.max(F.col("a").cast("double")).alias("mx_a"),
     ).first()
     assert got == {
-        "mn_k": scan["mn_k"], "mx_k": scan["mx_k"],
-        "mn_a": scan["mn_a"], "mx_a": scan["mx_a"],
+        "k": (scan["mn_k"], scan["mx_k"]),
+        "a": (scan["mn_a"], scan["mx_a"]),
     }
     # float column: refuse
-    assert dr._zorder_stats_from_log(adds, ["x"], dtypes, phys) is None
+    assert fold(adds, ["x"]) is None
     # DV on any chosen file: refuse (stats include dead rows)
     dr.delete_from_delta(spark, dest, "k = -1000")
     _m, adds2 = dr._snapshot(spark, dest, None)
     assert any(a.get("deletionVector") for a in adds2.values())
-    assert (
-        dr._zorder_stats_from_log(adds2, ["k"], dtypes, phys) is None
-    )
+    assert fold(adds2, ["k"]) is None

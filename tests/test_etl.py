@@ -2231,12 +2231,14 @@ def test_for_portion_of_update_boundaries(spark):
 
 def test_mtable_zorder_stats_from_manifest_matches_scan(spark, tmp_path):
     """optimize_zorder's normalization bounds folded from manifest
-    stats must equal the scan aggregate exactly for integer and
-    (UTC-session) timestamp columns, and refuse for float columns."""
+    stats (file_stats.fold over the manifest's records) must equal
+    the scan aggregate exactly for integer and (UTC-session)
+    timestamp columns, and refuse for float columns."""
     import datetime as dt
 
     from pyspark.sql import functions as F
 
+    from dataflowex_spark.sources import file_stats
     from dataflowex_spark.sources.mtable import MTable
 
     df = spark.createDataFrame(
@@ -2258,9 +2260,8 @@ def test_mtable_zorder_stats_from_manifest_matches_scan(spark, tmp_path):
         "k",
         stats_cols=["a", "ts", "x"],
     )
-    m = t.manifest()
-    dtypes = dict(t.read().dtypes)
-    got = t._zorder_stats_from_manifest(m, ["k", "a", "ts"], dtypes)
+    recs = t._stats(t.manifest())
+    got = file_stats.fold(recs, ["k", "a", "ts"])
     scan = t.read().agg(
         F.min(F.col("k").cast("double")).alias("mn_k"),
         F.max(F.col("k").cast("double")).alias("mx_k"),
@@ -2273,8 +2274,10 @@ def test_mtable_zorder_stats_from_manifest_matches_scan(spark, tmp_path):
             F.unix_micros(F.col("ts").cast("timestamp")).cast("double")
         ).alias("mx_ts"),
     ).first()
-    assert got == {k: scan[k] for k in got} and len(got) == 6
+    assert got == {
+        c: (scan[f"mn_{c}"], scan[f"mx_{c}"]) for c in ("k", "a", "ts")
+    }
     # float column refuses (repr round-trip is not provably exact)
-    assert t._zorder_stats_from_manifest(m, ["k", "x"], dtypes) is None
+    assert file_stats.fold(recs, ["k", "x"]) is None
     # undeclared stats column refuses (no per-file stats to fold)
-    assert t._zorder_stats_from_manifest(m, ["k", "zz"], dtypes) is None
+    assert file_stats.fold(recs, ["k", "zz"]) is None

@@ -1771,3 +1771,17 @@ def test_bounded_state_scope_restores_conf(spark, events_stream, monkeypatch):
     out_off, _ = run_to_memory(agg, output_mode="complete")
     assert sorted(map(tuple, out_off.collect())) == rows3
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_bounded_state_scope_rejects_malformed_env(spark, monkeypatch):
+    """A malformed SPARK_GRAFT_STREAM_STATE_PARTS fails with a message
+    that names the variable, before touching the session conf."""
+    from dataflowex_spark.streaming.ops import _bounded_state_scope
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    for raw in ("eight", "2.5"):
+        monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTS", raw)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_STATE_PARTS"):
+            with _bounded_state_scope(spark):
+                pass
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
